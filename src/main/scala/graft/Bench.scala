@@ -81,37 +81,11 @@ object Bench {
       s""""staging_build_sec":${fmt(stagingBuilds.values.sum)},"staging_builds":$builds,"staged_consumers":$cons"""
     }
     // Mutual exclusion with the DuckDB oracle sweeps (r14 verdict #2/#8):
-    // tools/sweep_lock.py marks any long sweep with a PID lock file; a
-    // bench overlapping one measured 34 phantom >1.5x regressions in
-    // unchanged code. Wait (bounded — the budget clock is running) for
-    // the lock to clear; if it won't, proceed but tag the output JSON so
-    // the number can never be read as a clean round-over-round signal.
-    @volatile var contended = false
-    val lockPath = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_SWEEP_LOCK", "/tmp/graft/oracle_sweep.lock"))
-    def holderAlive: Boolean = try {
-      val pid = new String(
-        java.nio.file.Files.readAllBytes(lockPath), "UTF-8").trim.toLong
-      ProcessHandle.of(pid).map[Boolean](_.isAlive).orElse(false)
-    } catch { case _: Throwable => false }
-    locally {
-      val lock = lockPath
-      val waitCap = math.min(budgetSec * 0.25, 600.0)
-      var warned = false
-      while (holderAlive && elapsed < waitCap) {
-        if (!warned) {
-          System.err.println(s"[bench] DuckDB sweep lock held ($lock); " +
-            f"waiting up to $waitCap%.0f s for a clean window")
-          warned = true
-        }
-        Thread.sleep(10000)
-      }
-      if (holderAlive) {
-        contended = true
-        System.err.println("[bench] sweep lock STILL held — proceeding " +
-          "contended; output tagged \"contended\":true")
-      }
-    }
+    // wait (bounded — the budget clock is running) for a clean window; if
+    // it won't come, proceed but tag the output JSON so the number can
+    // never be read as a clean round-over-round signal.
+    @volatile var contended =
+      Watchdog.awaitSweepLock("bench", math.min(budgetSec * 0.25, 600.0))
     def contendedJson: String = if (contended) "\"contended\":true," else ""
     def resultLine(): String = {
       import scala.jdk.CollectionConverters._
@@ -150,25 +124,11 @@ object Bench {
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       if (!finalPrinted && !best.isEmpty) emit()
     }))
-    // Hard self-deadline (r15: a 90 GB sf10 JVM wedged in TEARDOWN,
-    // ignoring SIGTERM for 7+ min — Spark's own shutdown hooks can hang
-    // on a huge heap, and SIGKILL then loses every result). A daemon
-    // reaper emits best-so-far and `halt`s the JVM — halt skips the
-    // wedgeable hooks — once the budget plus margin is spent. Nothing
-    // the bench still owes can be worth more than the results it holds.
-    locally {
-      val reaper = new Thread(() => {
-        while (true) {
-          Thread.sleep(5000)
-          if (elapsed > budgetSec + 120) {
-            if (!finalPrinted) emit()
-            System.err.println("[bench] hard deadline reached — halting JVM")
-            Runtime.getRuntime.halt(if (finalPrinted) 0 else 3)
-          }
-        }
-      }, "bench-reaper")
-      reaper.setDaemon(true)
-      reaper.start()
+    // Hard self-deadline: nothing the bench still owes can be worth more
+    // than the results it holds, so the reaper emits best-so-far first.
+    Watchdog.startDeadlineReaper("bench", t0, budgetSec) {
+      if (!finalPrinted) emit()
+      if (finalPrinted) 0 else 3
     }
 
     val spark = GraftSession.local("graft-bench", cpus)
@@ -234,7 +194,7 @@ object Bench {
         spark.catalog.clearCache()
         // A sweep can START mid-run (the lock only refuses sweep-vs-
         // sweep); sample it per query so any overlap taints the output.
-        if (!contended && holderAlive) contended = true
+        if (!contended && Watchdog.sweepLockHeld()) contended = true
         // Spark reclaims shuffle/broadcast state via GC-triggered weak refs
         // (ContextCleaner) — but a full GC on this heap costs seconds of
         // wall-clock, and 2 passes x 100+ queries of per-query GC burned
@@ -255,21 +215,13 @@ object Bench {
     // the same (sweep_lock only refuses sweep-vs-sweep; it cannot see a
     // running bench) — re-check before emitting so "contended" covers
     // the whole window, not just its first instant (r15 ADVICE).
-    if (holderAlive) contended = true
+    if (Watchdog.sweepLockHeld()) contended = true
     emit()
     // Only mark printed AFTER the lines are out: a SIGTERM landing between
     // the two statements would otherwise suppress both this print and the
     // shutdown hook's. A rare duplicate line is harmless — the driver
     // parses the last JSON line, and the summary is always last.
     finalPrinted = true
-    // Bound the teardown too: results are already out, so if stop()
-    // wedges (the r15 failure mode) a 2-minute daemon timer halts.
-    locally {
-      val t = new Thread(() => { Thread.sleep(120000); Runtime.getRuntime.halt(0) },
-        "bench-teardown-reaper")
-      t.setDaemon(true); t.start()
-    }
-    spark.stop()
-    Runtime.getRuntime.halt(0) // skip Spark's (wedgeable) shutdown hooks
+    Watchdog.stopAndHalt(spark, "bench")
   }
 }

@@ -38,25 +38,7 @@ object Verify {
     // caps, turning "not verified" into an artifact of contention. Wait
     // (bounded) for a clean window; dumps are not timings, so if the lock
     // never clears we proceed — capped failures get a pass-2 retry anyway.
-    locally {
-      val lock = Paths.get(
-        sys.env.getOrElse("GRAFT_SWEEP_LOCK", "/tmp/graft/oracle_sweep.lock"))
-      def holderAlive: Boolean = try {
-        val pid = new String(Files.readAllBytes(lock), "UTF-8").trim.toLong
-        ProcessHandle.of(pid).map[Boolean](_.isAlive).orElse(false)
-      } catch { case _: Throwable => false }
-      val w0 = System.nanoTime()
-      var warned = false
-      while (holderAlive && (System.nanoTime() - w0) / 1e9 < 300) {
-        if (!warned) {
-          System.err.println(s"[verify] DuckDB sweep lock held ($lock); waiting up to 300 s")
-          warned = true
-        }
-        Thread.sleep(10000)
-      }
-      if (holderAlive)
-        System.err.println("[verify] sweep lock STILL held — proceeding contended")
-    }
+    Watchdog.awaitSweepLock("verify", 300)
     val spark = GraftSession.local("graft-verify", cpus)
     val cap = Watchdog.queryCapSec
     val names = SparkEntry.queries.keys.toSeq.sorted
@@ -104,18 +86,7 @@ object Verify {
     // any huge-heap run of these mains): dumps land incrementally, so
     // once the budget plus margin is spent there is nothing left to
     // lose — halt, skipping the wedgeable Spark shutdown hooks.
-    locally {
-      val reaper = new Thread(() => {
-        while (true) {
-          Thread.sleep(5000)
-          if (remaining < -120) {
-            System.err.println("[verify] hard deadline reached — halting JVM")
-            Runtime.getRuntime.halt(3)
-          }
-        }
-      }, "verify-reaper")
-      reaper.setDaemon(true); reaper.start()
-    }
+    Watchdog.startDeadlineReaper("verify", t0, budgetSec)(3)
     val pass1Cap = math.min(60, cap)
     val stragglers = names.filterNot(attempt(_, pass1Cap))
     if (stragglers.nonEmpty && pass1Cap < cap) {
@@ -141,14 +112,7 @@ object Verify {
       residual.values.foreach(r =>
         System.err.println(s"[verify]   id=${r.id} ${r.getStorageLevel.description} ${r.name}"))
     }
-    // Bounded teardown (r15 wedge pattern): every dump is on disk, so if
-    // stop() hangs a 2-minute daemon timer halts the JVM.
-    locally {
-      val t = new Thread(() => { Thread.sleep(120000); Runtime.getRuntime.halt(0) },
-        "verify-teardown-reaper")
-      t.setDaemon(true); t.start()
-    }
-    spark.stop()
-    Runtime.getRuntime.halt(0)
+    // Every dump is on disk: bounded teardown.
+    Watchdog.stopAndHalt(spark, "verify")
   }
 }

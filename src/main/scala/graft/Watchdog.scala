@@ -1,9 +1,12 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+
 import org.apache.spark.sql.SparkSession
 
 /** Per-query execution guard for the driver-run harness mains (Verify,
-  * Bench).
+  * Bench), plus the run guards those mains share: the DuckDB sweep-lock
+  * wait, the hard-deadline reaper and the bounded teardown.
   *
   * Round-4 postmortem: the driver's external `timeout` killed both
   * harness runs (BENCH_r04 rc=124, CORRECTNESS_r04 empty) while the host
@@ -68,5 +71,69 @@ object Watchdog {
       timer.cancel()
       sc.clearJobGroup()
     }
+  }
+
+  /** PID lock file held by every long DuckDB sweep (tools/sweep_lock.py).
+    * A bench overlapping one measured 34 phantom >1.5x regressions in
+    * unchanged code, so the harness mains wait for it to clear. */
+  def sweepLockPath: Path =
+    Paths.get(sys.env.getOrElse("GRAFT_SWEEP_LOCK", "/tmp/graft/oracle_sweep.lock"))
+
+  /** True while a LIVE process holds `lock`. A missing file, unreadable
+    * or non-numeric contents and a dead PID all read as free: a killed
+    * sweep leaves a stale lock that must not block the harness forever. */
+  def sweepLockHeld(lock: Path = sweepLockPath): Boolean = try {
+    val pid = new String(Files.readAllBytes(lock), "UTF-8").trim.toLong
+    ProcessHandle.of(pid).map[Boolean](_.isAlive).orElse(false)
+  } catch { case _: Throwable => false }
+
+  /** Wait up to `capSec` (polling every 10 s) for the sweep lock to
+    * clear. Returns true if it is still held — the caller proceeds
+    * contended and decides what that taints. */
+  def awaitSweepLock(tag: String, capSec: Double): Boolean = {
+    val lock = sweepLockPath
+    val w0 = System.nanoTime()
+    var warned = false
+    while (sweepLockHeld(lock) && (System.nanoTime() - w0) / 1e9 < capSec) {
+      if (!warned) {
+        System.err.println(s"[$tag] DuckDB sweep lock held ($lock); " +
+          f"waiting up to $capSec%.0f s for a clean window")
+        warned = true
+      }
+      Thread.sleep(10000)
+    }
+    val held = sweepLockHeld(lock)
+    if (held) System.err.println(s"[$tag] sweep lock STILL held — proceeding contended")
+    held
+  }
+
+  /** Hard self-deadline (a 90 GB sf10 JVM once wedged in TEARDOWN,
+    * ignoring SIGTERM for 7+ min — Spark's own shutdown hooks can hang on
+    * a huge heap, and SIGKILL then loses every result). A daemon thread
+    * polls every 5 s; once `budgetSec` plus a 120 s margin has passed
+    * since `t0` (a System.nanoTime stamp) it evaluates `lastWords` and
+    * halts the JVM with the returned exit code — halt skips the
+    * wedgeable hooks. */
+  def startDeadlineReaper(tag: String, t0: Long, budgetSec: Double)(lastWords: => Int): Unit =
+    daemon(s"$tag-reaper") {
+      while ((System.nanoTime() - t0) / 1e9 <= budgetSec + 120) Thread.sleep(5000)
+      val code = lastWords
+      System.err.println(s"[$tag] hard deadline reached — halting JVM")
+      Runtime.getRuntime.halt(code)
+    }
+
+  /** Bounded teardown, for a main whose results are already out: stop
+    * the session, then halt (skipping Spark's wedgeable shutdown hooks).
+    * If stop() itself wedges, a daemon timer halts after 2 minutes. */
+  def stopAndHalt(spark: SparkSession, tag: String): Unit = {
+    daemon(s"$tag-teardown-reaper") { Thread.sleep(120000); Runtime.getRuntime.halt(0) }
+    spark.stop()
+    Runtime.getRuntime.halt(0)
+  }
+
+  private def daemon(name: String)(body: => Unit): Unit = {
+    val t = new Thread(() => body, name)
+    t.setDaemon(true)
+    t.start()
   }
 }

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * — `valueOf` is `new BigDecimal(Double.toString(x))`, i.e. a String
   * allocation + decimal parse + BigDecimal rounding PER CALL. F24
   * (m_logreg_newton) evaluates ten of these per row per Newton pass; the
-  * r17 sf10 StageProfile put the six passes at 56-73 CPU-s each with the
+  * sf10 stage profile put the six passes at 56-73 CPU-s each with the
   * BigDecimal machinery dominating the per-row cost.
   *
   * Fast path: HALF_UP rounds the SHORTEST-REPR decimal â of x, and

@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, TernaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 import org.apache.spark.sql.SparkSessionExtensions
 
 /** Native Catalyst expression for cosine similarity over `array<float>`
@@ -156,11 +156,20 @@ case class LshBucketF32(first: Expression, second: Expression, third: Expression
   * pays interpreted lambda machinery per element × per candidate
   * centroid (r16 sf10: 128 folds/row made a 32k-row assignment cost
   * ~10 s). Zip stops at the shorter array, matching `zip_with` over
-  * equal-length inputs (PQ subspaces are fixed-width). */
+  * equal-length inputs (PQ subspaces are fixed-width). A null element
+  * makes the result null, as it does in the HOF fold. */
 case class L2SqF64(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def dataType: DataType = DoubleType
+
+  private def elemsNullable(e: Expression): Boolean = e.dataType match {
+    case ArrayType(_, containsNull) => containsNull
+    case _ => true
+  }
+
+  override def nullable: Boolean =
+    left.nullable || right.nullable || elemsNullable(left) || elemsNullable(right)
 
   override def prettyName: String = "graft_l2sq"
 
@@ -170,7 +179,6 @@ case class L2SqF64(left: Expression, right: Expression)
   // overridable public seam (r16 ADVICE).
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
     import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    import org.apache.spark.sql.types.ArrayType
     Seq(left, right).zipWithIndex.collectFirst {
       case (c, i) if !c.dataType.isInstanceOf[ArrayType] ||
         c.dataType.asInstanceOf[ArrayType].elementType != DoubleType =>
@@ -186,6 +194,7 @@ case class L2SqF64(left: Expression, right: Expression)
     var acc = 0.0
     var i = 0
     while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return null
       val di = x.getDouble(i) - y.getDouble(i)
       acc += di * di
       i += 1
@@ -199,10 +208,16 @@ case class L2SqF64(left: Expression, right: Expression)
       val n = ctx.freshName("n")
       val acc = ctx.freshName("acc")
       val di = ctx.freshName("di")
+      // only element-nullable sides pay the per-element null check
+      val nullElem = Seq(left -> xa, right -> ya)
+        .collect { case (c, a) if elemsNullable(c) => s"$a.isNullAt($i)" }
+      val guard =
+        if (nullElem.isEmpty) "" else s"if (${nullElem.mkString(" || ")}) { ${ev.isNull} = true; break; }"
       s"""
          |int $n = java.lang.Math.min($xa.numElements(), $ya.numElements());
          |double $acc = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
+         |  $guard
          |  double $di = $xa.getDouble($i) - $ya.getDouble($i);
          |  $acc += $di * $di;
          |}

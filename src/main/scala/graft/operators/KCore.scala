@@ -24,15 +24,18 @@ object KCore {
     * with their WITHIN-CORE degree. `reliable` swaps localCheckpoint for
     * a fault-tolerant checkpoint (cluster deployments; see D6).
     *
+    * `deg0` optionally supplies the whole-graph degree table `(u, dg)`
+    * (e.g. the staged codeg rollup the co-purchase family shares) so the
+    * peel skips its own 2|E|-row aggregate; when absent it is computed
+    * here. It MUST match the degree multiset of `edges`: one row per
+    * node of `edges`, `dg` = the number of pairs it appears in. The peel
+    * trusts it — a mismatched table silently yields a wrong core.
+    *
     * Throws `IllegalStateException` if the peel has not converged after
     * `maxIter` rounds: the survivors would then be a SUPERSET of the
     * k-core (sub-k nodes still present), and a silently-wrong core is
     * worse than a loud failure. Callers on pathological graphs raise
     * maxIter (peel depth = degeneracy depth, ~5-20 even on web graphs). */
-  /** `deg0` optionally supplies the whole-graph degree table `(u, dg)`
-    * (e.g. the staged codeg rollup the co-purchase family shares) so the
-    * peel skips its own 2|E|-row aggregate; when absent it is computed
-    * here. */
   def kcore(edges: DataFrame, k: Int, maxIter: Int = 30,
             reliable: Boolean = false,
             deg0: Option[DataFrame] = None): DataFrame = {

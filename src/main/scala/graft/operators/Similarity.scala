@@ -74,7 +74,7 @@ object Similarity {
     // the HOF unit() chain — SimilaritySpec; the HOF form paid O(d²)
     // interpreted lambdas per row, 29 s at sf10), and the projected
     // features persist across KMeans' init + iteration passes (sf10
-    // StageProfile: the UNCACHED expression was evaluated three times).
+    // stage profile: the UNCACHED expression was evaluated three times).
     // No repartition here: the training partition layout feeds the
     // seeded k-means|| init, so spreading it would change the (rows-only)
     // centroids — the native expression keeps them bit-identical instead.
@@ -144,10 +144,6 @@ object Similarity {
     val top = slice(sort_array(array(scored.toIndexedSeq: _*), asc = false), 1, nProbe)
     transform(top, s => -s.getField("negid"))
   }
-
-  /** Debug hook: top-1 list id for a vector (Scratch stage profiler, test tree, only). */
-  def ivfDebugList(v: Column, centroids: Array[Array[Float]]): Column =
-    nearestLists(v, centroids, 1)(0)
 
   /** E3 — IVF top-k: corpus rows live in the inverted list of their
     * nearest centroid; each probe searches its `nProbe` nearest lists.

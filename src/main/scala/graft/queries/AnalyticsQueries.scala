@@ -14,7 +14,7 @@ import graft.sources.Tables
 object AnalyticsQueries {
 
   /** Exact decimal sum emitted as double: sum(CAST(e AS DECIMAL(p,s))). */
-  private def dsum(e: String, p: Int = 28, s: Int = 6) =
+  private[queries] def dsum(e: String, p: Int = 28, s: Int = 6) =
     expr(s"CAST(sum(CAST($e AS DECIMAL($p,$s))) AS DOUBLE)")
 
   val all: Seq[QueryDef] = Seq(

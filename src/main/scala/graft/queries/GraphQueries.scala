@@ -387,7 +387,7 @@ object GraphQueries {
     // stay under 2⁶³ below ~2·10⁶-degree hubs — the node dim itself),
     // one double closed form at the end. r16: the oracle's adj⋈deg⋈deg
     // form materialized 2|E| directed
-    // rows and sort-merge-joined them TWICE (sf10 StageProfile: 78.7 s +
+    // rows and sort-merge-joined them TWICE (sf10 stage profile: 78.7 s +
     // 18.3 s join stages, 3.2 GB shuffled — 97 of 110 s solo). Algebra
     // removes both joins for four of the five sums: over directed edge
     // instances node a appears exactly deg(a) times, so n = Σdeg,

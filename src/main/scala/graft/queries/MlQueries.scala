@@ -225,7 +225,7 @@ object MlQueries {
       // since bucket-level n_docs must count a doc once however many of
       // its tokens share the bucket), hash once per DISTINCT token, and
       // broadcast the vocabulary-sized tok→bucket map back on.
-      // One scan, bucket computed per occurrence (r16 — StageProfile
+      // One scan, bucket computed per occurrence (a stage profile
       // showed the previous dictionary-encode shape tokenizing the
       // single-file corpus in ONE 12 s task, twice). r16 second half:
       // the tokenize pass itself is now the staged doc_tok_cnt grain —
@@ -640,7 +640,7 @@ object MlQueries {
         when(col("event_type") === "purchase", 1L).otherwise(0L).as("y"))
       val t = sc.agg(count(lit(1)).as("tn"), sum("y").as("tpos"))
       // r16: the global ntile window ran as ONE task holding every row
-      // (sf10 StageProfile: 14.2 s single-task sort over 108 MB). The
+      // (sf10 stage profile: 14.2 s single-task sort over 108 MB). The
       // m_auc surrogate-key machinery gives the same total order
       // distributed (range partition + per-partition row_number +
       // offsets); ntile(10) is then closed-form integer arithmetic over
@@ -1028,7 +1028,7 @@ object MlQueries {
       // Project the narrow feature frame ONCE and persist it: the six
       // Newton passes then scan 24 B/row from memory instead of paying
       // the parquet decode + string compares + log() per pass (r16 sf10
-      // StageProfile: 6 × ~10 s stages, 110-170 CPU-s each — the scan
+      // stage profile: 6 × ~10 s stages, 110-170 CPU-s each — the scan
       // inputs re-decoded every iteration).
       val data = Tables.orders(s, d).select(
         when(col("o_orderpriority") === "1-URGENT", 1.0).otherwise(0.0).as("y"),
@@ -1045,7 +1045,7 @@ object MlQueries {
       // the ambiguous .5±ulp band; Round0ExprSpec stress-gates equality)
       // without Spark Round's BigDecimal.valueOf(Double.toString) per
       // call. Ten rounds per row × 15M rows × 6 passes was the dominant
-      // per-row cost (r17 sf10 StageProfile: 56-76 CPU-s per pass).
+      // per-row cost (sf10 stage profile: 56-76 CPU-s per pass).
       def iproj(e: String, n: String) = Seq(
         s"graft_round0(($e) * 1e12) AS ${n}_rd",
         s"CAST(FLOOR(graft_round0(($e) * 1e12) / 1e6) AS BIGINT) AS ${n}_hi0")

@@ -438,7 +438,7 @@ object SimilarityQueries {
       // fan. The staged incidence is laid out by (doc, tok) hash, so each
       // (q, d) group's rows were scattered across map partitions and the
       // partial aggregate collapsed nothing — the exchange carried the
-      // whole fan (sf1 StageProfile: 10.5 GB written, 309 s at 16 tasks =
+      // whole fan (sf1 stage profile: 10.5 GB written, 309 s at 16 tasks =
       // the scan's file count, half the machine idle). Hash by d
       // co-locates every token of a doc, so (a) the fan runs at cluster
       // parallelism and (b) HashPartitioning(d) satisfies the (q, d)
@@ -518,7 +518,7 @@ object SimilarityQueries {
       // The candidate fan-out (capped postings × probe tokens) has a TINY
       // input (vocab × cap rows, one parquet file) and a 100×+ fan — the
       // Dedup fanout trap: the scan is ONE task, so the whole fan ran
-      // serially (r17 sf10 StageProfile: 10.2 s single-task stage, the
+      // serially (sf10 stage profile: 10.2 s single-task stage, the
       // query's dominant cost). A numbered repartition by tok (exempt
       // from AQE coalescing) pins the fan at cluster parallelism.
       val fan = s.sparkContext.defaultParallelism

@@ -285,7 +285,7 @@ object StagedTables {
     * doc_id, one file per partition): the driver-generated corpus
     * parquet is ONE row group, so every direct scan — and the MAP side
     * of every spread repartition — runs as ONE task (r16 sf10
-    * StageProfile: 2-9 s of serial scan+shuffle-compression per
+    * stage profile: 2-9 s of serial scan+shuffle-compression per
     * consumer). Spread ONCE per JVM; heavy consumers read the 32-file
     * copy at full parallelism. Row content identical; every consumer
     * is either keyed/aggregated or globally ordered, so layout cannot

@@ -167,6 +167,23 @@ object StreamingQueries {
   // is a non-issue.
   private val stagingLock = new Object
 
+  /** Writes each frame as ONE parquet file `dir/<name>`, modification
+    * times pinned a minute apart in list order: the file source orders
+    * the replay by modification time, one file per micro-batch. */
+  private def stageReplay(dir: String, parts: Seq[(String, org.apache.spark.sql.DataFrame)]): Unit = {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val t0 = System.currentTimeMillis()
+    parts.zipWithIndex.foreach { case ((name, df), i) =>
+      val tmp = s"$dir/_tmp_$i"
+      df.coalesce(1).write.mode("overwrite").parquet(tmp)
+      val st = Files.list(Paths.get(tmp))
+      val src = try st.filter(_.toString.endsWith(".parquet")).findFirst.get finally st.close()
+      Files.copy(src, Paths.get(s"$dir/$name"), StandardCopyOption.REPLACE_EXISTING)
+      new java.io.File(s"$dir/$name").setLastModified(t0 - 180000 + i * 60000)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
+    }
+  }
+
   private def stagedEvents(s: org.apache.spark.sql.SparkSession, d: String,
                            doubled: Boolean = false, flush: Boolean = false): String = stagingLock.synchronized {
     val key = Integer.toHexString(d.hashCode) +
@@ -215,7 +232,6 @@ object StreamingQueries {
       Integer.toHexString(d.hashCode) + "late3"
     val done = new java.io.File(s"$dir/_STAGED")
     if (!done.isFile) {
-      import java.nio.file.{Files, Paths, StandardCopyOption}
       val ev = Tables.events(s, d)
       val bounds = ev.agg(min(col("ts")).as("mn"), max(col("ts")).as("mx")).head()
       val (mn, mx) = (bounds.getTimestamp(0), bounds.getTimestamp(1))
@@ -230,24 +246,10 @@ object StreamingQueries {
           (col("id") + 1).as("user_id"), lit("click").as("event_type"),
           lit(100.0).as("value"), lit(null).cast("string").as("props"))
         .unionByName(flushRow(2))
-      def onePart(df: org.apache.spark.sql.DataFrame, tmp: String): java.nio.file.Path = {
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val st = Files.list(Paths.get(tmp))
-        try st.filter(_.toString.endsWith(".parquet")).findFirst.get finally st.close()
-      }
-      val parts = Seq(
-        "00_real.parquet" -> onePart(ev, s"$dir/_tmp_a"),
-        "01_heartbeat.parquet" -> onePart(flushRow(1), s"$dir/_tmp_b"),
-        "02_late.parquet" -> onePart(planted, s"$dir/_tmp_c"))
-      Files.createDirectories(Paths.get(dir))
-      // the file source orders by modification time — pin the replay order
-      val t0 = System.currentTimeMillis()
-      parts.zipWithIndex.foreach { case ((name, src), i) =>
-        Files.copy(src, Paths.get(s"$dir/$name"), StandardCopyOption.REPLACE_EXISTING)
-        new java.io.File(s"$dir/$name").setLastModified(t0 - 180000 + i * 60000)
-      }
-      Seq("_tmp_a", "_tmp_b", "_tmp_c").foreach(t =>
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$dir/$t")))
+      stageReplay(dir, Seq(
+        "00_real.parquet" -> ev,
+        "01_heartbeat.parquet" -> flushRow(1),
+        "02_late.parquet" -> planted))
       done.createNewFile()
     }
     dir
@@ -612,7 +614,6 @@ object StreamingQueries {
         Integer.toHexString(d.hashCode) + "ter3"
       val done = new java.io.File(s"$dir/_STAGED")
       if (!done.isFile) {
-        import java.nio.file.{Files, Paths, StandardCopyOption}
         // single-partition sort, THEN the id: on one partition
         // monotonically_increasing_id is 0..n-1 in sort order (after a
         // distributed orderBy the ids would be partition-offset encoded —
@@ -623,26 +624,13 @@ object StreamingQueries {
           .persist()
         val n = one.count()
         def slice(lo: Long, hi: Long) = one.filter(col("__rn") >= lo && col("__rn") < hi).drop("__rn")
-        def onePart(df: org.apache.spark.sql.DataFrame, tmp: String): java.nio.file.Path = {
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val st = Files.list(Paths.get(tmp))
-          try st.filter(_.toString.endsWith(".parquet")).findFirst.get finally st.close()
-        }
         val cut1 = n / 3
         val cut2 = 2 * n / 3
-        val parts = Seq(
-          "00_t0.parquet" -> onePart(slice(0, cut1), s"$dir/_tmp_a"),
-          "01_t1.parquet" -> onePart(slice(cut1, cut2), s"$dir/_tmp_b"),
-          "02_t2.parquet" -> onePart(slice(cut2, n), s"$dir/_tmp_c"))
-        Files.createDirectories(Paths.get(dir))
-        val t0 = System.currentTimeMillis()
-        parts.zipWithIndex.foreach { case ((name, src), i) =>
-          Files.copy(src, Paths.get(s"$dir/$name"), StandardCopyOption.REPLACE_EXISTING)
-          new java.io.File(s"$dir/$name").setLastModified(t0 - 180000 + i * 60000)
-        }
+        stageReplay(dir, Seq(
+          "00_t0.parquet" -> slice(0, cut1),
+          "01_t1.parquet" -> slice(cut1, cut2),
+          "02_t2.parquet" -> slice(cut2, n)))
         one.unpersist()
-        Seq("_tmp_a", "_tmp_b", "_tmp_c").foreach(t =>
-          org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$dir/$t")))
         done.createNewFile()
       }
       dir

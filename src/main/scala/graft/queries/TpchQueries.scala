@@ -23,9 +23,7 @@ import graft.sources.Tables
   * driver-hash defect class); every query ends in a total ORDER BY.
   */
 object TpchQueries {
-
-  private def dsum(e: String, p: Int = 28, s: Int = 6) =
-    expr(s"CAST(sum(CAST($e AS DECIMAL($p,$s))) AS DOUBLE)")
+  import AnalyticsQueries.dsum
 
   val all: Seq[QueryDef] = Seq(
 
@@ -450,7 +448,7 @@ object TpchQueries {
       // ≥ 2, and "no OTHER late supplier" ⟺ the order's distinct LATE
       // suppliers == 1 (that one supplier is then the blocked one). The
       // r15 semi+anti form shuffled the full fact twice and fanned it
-      // through two order-keyed joins (sf10 StageProfile: 1.0 GB + 0.76
+      // through two order-keyed joins (sf10 stage profile: 1.0 GB + 0.76
       // GB shuffle writes, 2.96 GB join-stage read, 590 CPU-s); the
       // aggregate-first form shuffles map-side-collapsed distinct
       // (order, supplier) pairs once per side and joins two order-grain

@@ -94,6 +94,23 @@ class PropertySpec extends AnyFunSuite {
       }
     }
 
+    test(s"k-core peel with a supplied deg0 == computing it (seed $seed)") {
+      val rnd = new Random(4000 + seed)
+      val n = 30
+      val edges = (0 until 70)
+        .map(_ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+        .filter { case (a, b) => a != b }
+        .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
+        .distinct.toDF("u", "v")
+      def degreesOf(e: org.apache.spark.sql.DataFrame) =
+        e.select(explode(array(col("u"), col("v"))).as("u")).groupBy("u").agg(count(lit(1)).as("dg"))
+      for (k <- Seq(2, 3)) {
+        def core(deg0: Option[org.apache.spark.sql.DataFrame]) =
+          graft.operators.KCore.kcore(edges, k, deg0 = deg0).as[(Long, Long)].collect().toMap
+        assert(core(Some(degreesOf(edges))) == core(None), s"k=$k")
+      }
+    }
+
     test(s"k-core peel throws on maxIter exhaustion instead of returning a superset (seed $seed)") {
       // a path graph peels one layer per round: 0-1-2-...-9 with k=2
       // strips both endpoints each round and needs ~5 rounds to empty —

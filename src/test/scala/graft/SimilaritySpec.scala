@@ -57,12 +57,23 @@ class SimilaritySpec extends AnyFunSuite {
     val pairs = emb.select(col("vec_id").as("a"), col("embedding").as("av"))
       .crossJoin(emb.select(col("vec_id").as("b"), col("embedding").as("bv")))
       .filter(col("a") < col("b"))
-    val diffs = pairs.select(
+    // a null element makes both forms null; id-dependent so it is not
+    // constant-folded and takes the codegen path like the real rows
+    val nullElem = spark.range(1).selectExpr("-1L AS a",
+      "array(CAST(id + 1 AS FLOAT), CAST(NULL AS FLOAT), CAST(2 AS FLOAT)) AS av",
+      "-2L AS b", "array(CAST(id AS FLOAT), CAST(1 AS FLOAT), CAST(3 AS FLOAT)) AS bv")
+    val both = pairs.unionByName(nullElem).select(
         VectorFunctions.l2sqFast(col("av"), col("bv")).as("native"),
         VectorFunctions.l2sq(col("av"), col("bv")).as("hof"))
-      .filter(col("native") =!= col("hof")) // bit-exact: plain != on doubles
-      .count()
-    assert(diffs == 0)
+    // bit-exact: null-safe == on doubles
+    assert(both.filter(!(col("native") <=> col("hof"))).count() == 0)
+    assert(both.filter(col("native").isNull).count() == 1)
+    // and the interpreted path agrees
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    def arr(xs: Any*) = Literal.create(xs, ArrayType(DoubleType))
+    assert(graft.functions.L2SqF64(arr(1.0, null, 2.0), arr(0.0, 1.0, 3.0)).eval() == null)
+    assert(graft.functions.L2SqF64(arr(1.0, 2.0), arr(0.0, 4.0)).eval() == 5.0)
   }
 
   test("graft_cosine is registered for SQL via GraftExtensions") {
