@@ -20,9 +20,8 @@ import org.apache.spark.sql.SparkSession
 object Recommend {
 
   /** Trained once per dataset and SAVED TO DISK (ALSModel.write → factor
-    * parquet + metadata), then re-loaded per call — the staged-table
-    * idiom applied to a model artifact, replacing the former in-JVM
-    * ALSModel memo, which had two defects:
+    * parquet + metadata) as a staged artifact, then re-loaded per call,
+    * replacing the former in-JVM ALSModel memo, which had two defects:
     *  - the memoized model held factor DataFrames bound to the session
     *    (and the cache blocks) that trained it, so a session restart or a
     *    harness `clearCache()` between queries invalidated them — serving
@@ -35,18 +34,14 @@ object Recommend {
     * model-registry shape. Train config: rank 8, 5 implicit iterations,
     * seed 42 (deterministic on a fixed layout; RegressionSpec pins the
     * ranking margin). */
-  def alsModel(s: SparkSession, d: String): ALSModel = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_als_" +
-      Integer.toHexString(d.hashCode)
-    if (!new java.io.File(s"$dir/metadata/_SUCCESS").isFile) {
-      val als = new ALS()
+  def alsModel(s: SparkSession, d: String): ALSModel =
+    ALSModel.load(graft.queries.StagedTables.stageDir("als", d) { dir =>
+      new ALS()
         .setRank(8).setMaxIter(5).setRegParam(0.1)
         .setImplicitPrefs(true).setAlpha(1.0).setSeed(42)
         .setUserCol("user").setItemCol("item").setRatingCol("rating")
         .setColdStartStrategy("drop")
-      als.fit(graft.queries.MlQueries.alsInteractions(s, d))
+        .fit(graft.queries.MlQueries.alsInteractions(s, d))
         .write.overwrite().save(dir)
-    }
-    ALSModel.load(dir)
-  }
+    })
 }

@@ -200,8 +200,7 @@ object CurationQueries {
         |  doc_id, source, CAST(rn AS BIGINT) AS rn
         |FROM r ORDER BY position""".stripMargin) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
-      val docs = StagedTables.docsSpread(s, d) // spread corpus copy: 32-way map side (r17)
-        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+      val docs = StagedTables.docsWide(s, d)
       val w = Window.partitionBy("source")
         .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
       val r = docs.select(col("doc_id"), col("source"),
@@ -241,8 +240,7 @@ object CurationQueries {
     }) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
       import graft.functions.TextFunctions
-      val t = StagedTables.docsSpread(s, d) // spread corpus copy: 32-way map side (r17)
-        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+      val t = StagedTables.docsWide(s, d)
         .select(col("doc_id"), col("source"),
           TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"),
           md5(col("doc_id").cast("string")).as("h"))

@@ -17,24 +17,18 @@ object DedupQueries {
   private val toks = TextFunctions.tokensDuck("text")
   private val P = Dedup.P
 
-  /** The D2/D2c shared candidate table (a, b, inter, na, nb), staged to
-    * tmp parquet ONCE per (input dir, n) per JVM — the same immutable-
-    * input staging idiom as StreamingQueries.stagedEvents. Jaccard and
-    * containment differ only in their closing arithmetic; before this,
-    * each query planned its own full candidate pass (shingle → bucket →
-    * pair explosion → inter count), so the harness paid the expensive
-    * stage twice per session (r6 verdict item 3: d_containment at 2.2×
-    * its oracle purely from the duplicated build). Parquet, not
-    * `persist()`: the harness clears the Spark cache between queries,
-    * and a tmp file survives that. On a cluster this is exactly the
+  /** The D2/D2c shared candidate table (a, b, inter, na, nb), staged
+    * per n (StagedTables). Jaccard and containment differ only in their
+    * closing arithmetic; before this, each query planned its own full
+    * candidate pass (shingle → bucket → pair explosion → inter count),
+    * so the harness paid the expensive stage twice per session (r6
+    * verdict item 3: d_containment at 2.2× its oracle purely from the
+    * duplicated build). On a cluster this is exactly the
     * write-once-reuse shape the candidate table would take anyway
     * (materialized between pipeline stages, shared by every closing
     * metric). */
   private[queries] def stagedOverlap(s: org.apache.spark.sql.SparkSession, d: String,
                                      n: Int): org.apache.spark.sql.DataFrame =
-    // Routed through StagedTables.staged so the build cost lands in the
-    // shared buildLog (bench staging disclosure) and check-then-stage
-    // serializes on the one staging lock.
     StagedTables.staged(s, s"overlap_n$n", d)(
       Dedup.setOverlapPairs(StagedTables.docsSpread(s, d), "doc_id", "text", n))
 
@@ -341,7 +335,7 @@ object DedupQueries {
     // spec'd in SimilaritySpec.
     QueryDef.rowsOnly("d_embed_neardup_ivf") { (s, d) =>
       val emb = Tables.embeddings(s, d)
-      val centroids = SimilarityQueries.centroidsFor(emb, d)
+      val centroids = SimilarityQueries.centroidsFor(s, d)
       graft.operators.Similarity.embeddingNearDupPairsIvf(emb, centroids, 0.4)
         .orderBy("a", "b")
     },

@@ -4,9 +4,29 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
-/** Cross-query staged intermediates (the DedupQueries.stagedOverlap idiom):
-  * expensive data-scale passes several queries share, materialized to tmp
-  * parquet ONCE per (input dir) per JVM and re-read by every consumer.
+/** The one home of every once-per-input artifact: staged tables, stream
+  * replays, snapshot-table scenarios and trained models that several
+  * queries (or several runs of one query) share. Each is built ONCE per
+  * (tag, input dir) and re-read by every consumer. The contract, which
+  * no caller restates or re-implements:
+  *  - **Naming:** a directory artifact lives at
+  *    `<java.io.tmpdir>/graft_<tag>_<hex(d.hashCode)>`, a catalog table
+  *    is named `<tag>_<hex(d.hashCode)>`.
+  *  - **Completeness:** a directory is complete iff its `_STAGED` marker
+  *    exists; the marker is written last, after the build returned. A
+  *    catalog table is complete iff the catalog knows it (saveAsTable
+  *    registers it last).
+  *  - **Rebuild:** a directory without the marker (a killed or failed
+  *    build, a stale layout) is cleared and rebuilt; a warehouse dir the
+  *    catalog forgot (a previous JVM's) is deleted before the rebuild —
+  *    the bucketing spec lives in the catalog, so the orphan is useless.
+  *  - **Locking:** one JVM-wide lock serializes every check-then-build, so
+  *    two racing callers never both build, and no build clears files a
+  *    reader of the finished artifact is using.
+  *  - **Disclosure:** every build's seconds go into [[buildLog]] under its
+  *    tag; a tag must be registered in [[consumers]], and [[prebuild]]
+  *    forces every registered tag, so the bench artifact lists every
+  *    one-time cost a timed query depends on.
   *
   * Parquet, not `persist()`: the harness clears the Spark cache between
   * queries, and on a cluster this is exactly the write-once-reuse shape
@@ -18,25 +38,24 @@ import graft.sources.Tables
   */
 object StagedTables {
 
+  private def inputKey(d: String): String = Integer.toHexString(d.hashCode)
+
   private def stagedDir(tag: String, d: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_" +
-      Integer.toHexString(d.hashCode)
+    s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_${inputKey(d)}"
 
-  // JVM-wide lock serializing check-then-stage (the StreamingQueries
-  // stagingLock discipline): a racing second build's mode("overwrite")
-  // delete could yank files from under the first thread's readers.
-  private val stagingLock = new Object
+  private def stagedTable(tag: String, d: String): String = s"${tag}_${inputKey(d)}"
 
-  /** Seconds spent materializing each staged table in THIS JVM, keyed by
-    * tag — the bench reads this to DISCLOSE staging amortization in its
+  private val lock = new Object
+
+  /** Seconds spent materializing each staged artifact in THIS JVM, keyed
+    * by tag — the bench reads this to DISCLOSE staging amortization in its
     * artifact (a staged build runs once but several timed queries
-    * consume it, while the DuckDB baseline pays the equivalent join in
+    * consume it, while the DuckDB baseline pays the equivalent work in
     * every execution; the disclosure lets a reader compare equal work). */
   val buildLog = new java.util.concurrent.ConcurrentHashMap[String, Double]()
 
-  /** Which gated queries consume each staged table (disclosure twin of
-    * [[buildLog]]; `overlap_n3` is DedupQueries' staged candidate table,
-    * which [[prebuild]] forces through the same accounting). */
+  /** Every staged tag and the gated queries (or downstream staged tags)
+    * that consume it — the disclosure twin of [[buildLog]]. */
   val consumers: Map[String, Seq[String]] = Map(
     "docs_spread" -> Seq("doc_tok_cnt", "raw_docsets3", "corpus_scored",
       "overlap_n3", "d_substring_dedup", "t_chunk_overlap",
@@ -72,37 +91,108 @@ object StagedTables {
       "d_dedup_report", "nd_comp"),
     "nd_comp" -> Seq("d_components", "d_dedup_report", "d_survivor_pick"),
     "rrf_idf" -> Seq("s_hybrid_rrf", "s_hybrid_rrf_capped"),
-    "rrf_postings" -> Seq("s_hybrid_rrf_capped"))
+    "rrf_postings" -> Seq("s_hybrid_rrf_capped"),
+    "g9_orders" -> Seq("q_bucketed_join"),
+    "g9_customer" -> Seq("q_bucketed_join"),
+    "snaptable" -> Seq("q_table_merge", "q_time_travel", "q_table_history"),
+    "snaptable_c" -> Seq("q_table_compact"),
+    "snaptable_e" -> Seq("q_table_evolve"),
+    "snaptable_f" -> Seq("q_table_cdf"),
+    "snaptable_r" -> Seq("q_table_restore"),
+    "stream_events" -> Seq("f_stream_tumbling", "f_stream_join",
+      "f_stream_update_counts", "f_stream_sliding", "f_stream_enrich"),
+    "stream_events_x2" -> Seq("f_stream_dedup"),
+    "stream_events_fl" -> Seq("f_stream_session"),
+    "stream_events_late3" -> Seq("f_stream_late"),
+    "stream_events_ter3" -> Seq("f_stream_upsert"),
+    "als" -> Seq("m_als"),
+    "ivf_centroids" -> Seq("s_ann_ivf", "d_embed_neardup_ivf"),
+    "pq_codebooks" -> Seq("s_pq_quantize"))
 
-  private def stage(tag: String, d: String)(build: => DataFrame)
-                   (read: String => DataFrame): DataFrame = {
-    val dir = stagedDir(tag, d)
-    stagingLock.synchronized {
-      if (!new java.io.File(s"$dir/_SUCCESS").isFile) {
-        val t0 = System.nanoTime()
-        build.write.mode("overwrite").parquet(dir)
-        buildLog.put(tag, (System.nanoTime() - t0) / 1e9)
-      }
-    }
-    read(dir)
+  private def logged(tag: String)(build: => Unit): Unit = {
+    val t0 = System.nanoTime()
+    build
+    buildLog.put(tag, (System.nanoTime() - t0) / 1e9)
   }
 
-  /** Force EVERY staged table for input `d` to build fresh, returning
-    * tag → build seconds. Bench calls this once before its timed passes:
-    * pre-existing staged dirs (a prior process at the same sf) are
-    * dropped first so the reported cost is a real build, and the timed
-    * passes then measure every consumer against an already-staged table —
-    * the amortization the artifact's `staging` block discloses. */
+  /** The staged directory for (`tag`, `d`), running `build(dir)` into an
+    * empty dir first unless a complete one exists. */
+  def stageDir(tag: String, d: String)(build: String => Unit): String = {
+    require(consumers.contains(tag), s"unregistered staged tag '$tag'")
+    val dir = stagedDir(tag, d)
+    val marker = new java.io.File(dir, "_STAGED")
+    lock.synchronized {
+      if (!marker.isFile) {
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+        new java.io.File(dir).mkdirs()
+        logged(tag)(build(dir))
+        marker.createNewFile()
+      }
+    }
+    dir
+  }
+
+  /** The catalog twin of [[stageDir]]: the name of the staged table for
+    * (`tag`, `d`), running `build(name)` (which must saveAsTable it) unless
+    * the catalog already has it. */
+  def stageTable(s: SparkSession, tag: String, d: String)(build: String => Unit): String = {
+    require(consumers.contains(tag), s"unregistered staged tag '$tag'")
+    val tbl = stagedTable(tag, d)
+    lock.synchronized {
+      if (!s.catalog.tableExists(tbl)) {
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(
+          new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath, tbl))
+        logged(tag)(build(tbl))
+      }
+    }
+    tbl
+  }
+
+  /** A named cross-query frame staged as parquet and re-read by every
+    * consumer. */
+  def staged(s: SparkSession, tag: String, d: String)(build: => DataFrame): DataFrame =
+    s.read.parquet(stageDir(tag, d)(build.write.mode("overwrite").parquet(_)))
+
+  /** A trained float model (blocks × rows × cols) staged as `model.bin`:
+    * a DataOutputStream holding the block count, each block's (rows,
+    * cols), then every float — never Java serialization, since the dir
+    * sits in a shared tmp. Rows are per block because KMeans returns
+    * fewer than k centers when its input has fewer distinct points.
+    * Reading it back runs no Spark job. */
+  def stagedFloats(tag: String, d: String)(train: => Array[Array[Array[Float]]])
+      : Array[Array[Array[Float]]] = {
+    import java.io._
+    val file = stageDir(tag, d) { dir =>
+      val model = train
+      val out = new DataOutputStream(new BufferedOutputStream(
+        new FileOutputStream(s"$dir/model.bin")))
+      try {
+        out.writeInt(model.length)
+        model.foreach { b => out.writeInt(b.length); out.writeInt(b.headOption.fold(0)(_.length)) }
+        model.foreach(_.foreach(_.foreach(out.writeFloat)))
+      } finally out.close()
+    } + "/model.bin"
+    val in = new DataInputStream(new BufferedInputStream(new FileInputStream(file)))
+    try {
+      val shape = Array.fill(in.readInt())((in.readInt(), in.readInt()))
+      shape.map { case (rows, cols) => Array.fill(rows, cols)(in.readFloat()) }
+    } finally in.close()
+  }
+
+  /** Force EVERY registered artifact for input `d` to build fresh,
+    * returning tag → build seconds. Bench calls this once before its
+    * timed passes: existing dirs and tables (a prior process at the same
+    * sf) are dropped first so the reported cost is a real build, and the
+    * timed passes then measure every consumer against an already-staged
+    * artifact — the amortization the artifact's `staging` block
+    * discloses. */
   def prebuild(s: SparkSession, d: String): Map[String, Double] = {
-    stagingLock.synchronized {
+    lock.synchronized {
       consumers.keys.foreach { tag =>
-        org.apache.commons.io.FileUtils.deleteQuietly(
-          new java.io.File(stagedDir(tag, d)))
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(stagedDir(tag, d)))
+        s.sql(s"DROP TABLE IF EXISTS ${stagedTable(tag, d)}")
         buildLog.remove(tag)
       }
-      // orderlines is catalog-managed (bucketed) — drop it so its build
-      // cost is measured fresh like the parquet-staged tables
-      s.sql(s"DROP TABLE IF EXISTS orderlines_${Integer.toHexString(d.hashCode)}")
     }
     docsSpread(s, d)
     incidence(s, d)
@@ -110,8 +200,7 @@ object StagedTables {
     orderMax(s, d)
     coEdges(s, d)
     coDeg(s, d)
-    Seq("details", "premitted_biz_details").foreach(t =>
-      staged(s, s"pipeline_$t", d)(graft.pipeline.FoodPipeline.build(s, d)(t)))
+    Seq("details", "premitted_biz_details").foreach(PipelineQueries.normalized(s, d, _))
     DedupQueries.stagedOverlap(s, d, 3)
     knnCm(s, d)
     corpusScored(s, d)
@@ -122,11 +211,14 @@ object StagedTables {
     rawDocSets3(s, d)
     ndPairs(s, d)
     ndComponents(s, d)
-    // E12 keyword artifacts (idf/postings — both derive from the
-    // doc_tok_cnt incidence staged above; r16 removed their separate
-    // rrf_tokens tokenize pass).
     SimilarityQueries.rrfIdf(s, d)
     SimilarityQueries.rrfPostings(s, d)
+    EtlQueries.bucketedOrdersCustomer(s, d)
+    TableQueries.stageScenarios(s, d)
+    StreamingQueries.stageReplays(s, d)
+    graft.ml.Recommend.alsModel(s, d)
+    SimilarityQueries.centroidsFor(s, d)
+    SimilarityQueries.pqCodebooksFor(s, d)
     import scala.jdk.CollectionConverters._
     buildLog.asScala.toMap
   }
@@ -136,22 +228,16 @@ object StagedTables {
     * and q_basket_rules' per-part support counts; the distinct is the
     * only data-scale dedup either needs. */
   def incidence(s: SparkSession, d: String): DataFrame =
-    stage("incidence", d) {
+    staged(s, "incidence", d) {
       Tables.lineitem(s, d)
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
         .distinct()
-    }(s.read.parquet(_))
-
-  /** Public face of the stage idiom for callers outside this object: a
-    * named cross-query frame, built once per (tag, input dir) per JVM and
-    * re-read as parquet by every consumer. */
-  def staged(s: SparkSession, tag: String, d: String)(build: => DataFrame): DataFrame =
-    stage(tag, d)(build)(s.read.parquet(_))
+    }
 
   /** Line-grain orders⋈lineitem denormalization — the fact-fact shuffle
     * q4_priority_exists / q_ship_sla / q_interval_overlap /
     * q_reorder_rate each paid separately (r11's four most expensive
-    * sf1 ratio rows share exactly this stage). Joined ONCE per JVM and
+    * sf1 ratio rows share exactly this stage). Joined ONCE and
     * materialized; every consumer is then a single scan + its own
     * grain-reducing aggregate, and parquet column pruning means each
     * reads only its 2-4 columns of the six. Inner join is the right
@@ -169,30 +255,18 @@ object StagedTables {
     // consumers group on non-part keys and read the layout neutrally.
     // The pre-write repartition on the SAME hash (bucketBy and
     // repartition both use Murmur3 pmod) lands each bucket as one file.
-    val tbl = "orderlines_" + Integer.toHexString(d.hashCode)
-    stagingLock.synchronized {
-      if (!s.catalog.tableExists(tbl)) {
-        // a previous JVM can leave the warehouse dir while the
-        // in-memory catalog forgot the table; the bucketing spec lives
-        // in the catalog, so the orphan dir is useless — rebuild
-        val wh = new java.io.File(new java.net.URI(
-          s.conf.get("spark.sql.warehouse.dir")).getPath, tbl)
-        if (wh.exists()) org.apache.commons.io.FileUtils.deleteQuietly(wh)
-        val t0 = System.nanoTime()
-        val nb = s.sparkContext.defaultParallelism
-        val build = Tables.lineitem(s, d)
-          .select("l_orderkey", "l_partkey", "l_shipdate")
-          .join(Tables.orders(s, d)
-            .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
-              col("o_orderpriority")),
-            col("o_orderkey") === col("l_orderkey"))
-          .drop("o_orderkey")
-          .repartition(nb, col("l_partkey"))
-        Tables.writeBucketed(build, tbl, Seq("l_partkey"), nb)
-        buildLog.put("orderlines", (System.nanoTime() - t0) / 1e9)
-      }
-    }
-    s.table(tbl)
+    val nb = s.sparkContext.defaultParallelism
+    s.table(stageTable(s, "orderlines", d) { tbl =>
+      val build = Tables.lineitem(s, d)
+        .select("l_orderkey", "l_partkey", "l_shipdate")
+        .join(Tables.orders(s, d)
+          .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
+            col("o_orderpriority")),
+          col("o_orderkey") === col("l_orderkey"))
+        .drop("o_orderkey")
+        .repartition(nb, col("l_partkey"))
+      Tables.writeBucketed(build, tbl, Seq("l_partkey"), nb)
+    })
   }
 
   /** Order-grain fulfillment summary `(l_orderkey, o_orderdate,
@@ -208,27 +282,27 @@ object StagedTables {
     * narrow rows plus a dimension-sized finish. The standard warehouse
     * shape: a fulfillment summary table derived from the line fact. */
   def orderMax(s: SparkSession, d: String): DataFrame =
-    stage("ordermax", d) {
+    staged(s, "ordermax", d) {
       orderLines(s, d)
         .groupBy(col("l_orderkey"), col("o_orderdate"), col("o_orderpriority"))
         .agg(max(col("l_shipdate")).as("max_ship"))
-    }(s.read.parquet(_))
+    }
 
   /** E4's brute-force kNN confusion matrix `(true_label, pred_label, n)`
     * — the label²-sized result of the one genuinely data-scale stage
     * (test×train cosine top-k over the embeddings table) that
     * s_knn_classify, m_confusion_metrics and m_mcc_kappa each re-ran
     * from scratch (23-40 s EACH at sf10, ~88 s of the suite between
-    * them). Built once per (input dir) per JVM; each consumer is then a
-    * label-dimension finish over a tiny parquet. On a cluster this is
-    * exactly the evaluation-artifact table a model-eval pipeline
-    * materializes once and reports many metrics from. */
+    * them). Built once; each consumer is then a label-dimension finish
+    * over a tiny parquet. On a cluster this is exactly the
+    * evaluation-artifact table a model-eval pipeline materializes once
+    * and reports many metrics from. */
   def knnCm(s: SparkSession, d: String): DataFrame =
-    stage("knn_cm", d) {
+    staged(s, "knn_cm", d) {
       val (te, tr) = SimilarityQueries.knnSplit(Tables.embeddings(s, d))
       SimilarityQueries.knnConfusion(SimilarityQueries.knnPredictions(
         te, tr, graft.operators.Similarity.bruteForceTopK(te, tr, 5)))
-    }(s.read.parquet(_))
+    }
 
   /** The scored corpus (doc_id, text, source, n_tokens, quality,
     * pred_lang) — the tokenize/score/langid pass every corpus-curation
@@ -240,38 +314,38 @@ object StagedTables {
     * writes between phases anyway (score once, filter once, shingle
     * once, dedup once; each artifact re-read by later phases). */
   def corpusScored(s: SparkSession, d: String): DataFrame =
-    stage("corpus_scored", d) {
+    staged(s, "corpus_scored", d) {
       TextQueries.scoredDf(s, d)
         .select("doc_id", "text", "source", "n_tokens", "quality", "pred_lang")
-    }(s.read.parquet(_))
+    }
 
   /** The cleaned corpus (C5 gate: quality ≥ 0.4 ∧ en ∧ exact-dedup
     * keep-first) over [[corpusScored]] — consumed directly by
     * p_corpus_clean / p_llm_prep / p_llm_prep_pack and as the
     * [[llmDocSets]] base. */
   def corpusKept(s: SparkSession, d: String): DataFrame =
-    stage("corpus_kept", d) {
+    staged(s, "corpus_kept", d) {
       graft.operators.Relational.dedupKeepFirst(
           corpusScored(s, d)
             .filter(col("quality") >= 0.4 && col("pred_lang") === "en")
             .withColumn("__h", md5(col("text"))),
           Seq("__h"), Seq(col("doc_id")))
         .select("doc_id", "text", "source", "n_tokens", "quality")
-    }(s.read.parquet(_))
+    }
 
   /** Per-doc 3-shingle id sets `(doc, gs)` over the cleaned corpus —
     * the D3 MinHash base both composed-prep queries share. */
   def llmDocSets(s: SparkSession, d: String): DataFrame =
-    stage("llm_docsets", d) {
+    staged(s, "llm_docsets", d) {
       graft.operators.Dedup.hashedDocSets(
         corpusKept(s, d).select("doc_id", "text"), "doc_id", "text", 3)
-    }(s.read.parquet(_))
+    }
 
   /** Near-dup LOSER ids (the higher doc_id of every verified pair with
     * jaccard ≥ 0.5) from the D3 MinHash+LSH chain over [[llmDocSets]] —
     * the anti-join side of p_llm_prep / p_llm_prep_pack. */
   def llmNd(s: SparkSession, d: String): DataFrame =
-    stage("llm_nd", d) {
+    staged(s, "llm_nd", d) {
       import graft.operators.Dedup
       val docSets = llmDocSets(s, d)
       Dedup.verifiedJaccard(
@@ -279,22 +353,29 @@ object StagedTables {
           docSets)
         .filter(col("jaccard") >= 0.5)
         .select(col("b").as("doc_id")).distinct()
-    }(s.read.parquet(_))
+    }
 
   /** The documents table re-chunked to cluster parallelism (hash by
     * doc_id, one file per partition): the driver-generated corpus
     * parquet is ONE row group, so every direct scan — and the MAP side
     * of every spread repartition — runs as ONE task (r16 sf10
     * stage profile: 2-9 s of serial scan+shuffle-compression per
-    * consumer). Spread ONCE per JVM; heavy consumers read the 32-file
-    * copy at full parallelism. Row content identical; every consumer
-    * is either keyed/aggregated or globally ordered, so layout cannot
-    * change results. */
+    * consumer). Spread ONCE; heavy consumers read the 32-file copy at
+    * full parallelism. Row content identical; every consumer is either
+    * keyed/aggregated or globally ordered, so layout cannot change
+    * results. */
   def docsSpread(s: SparkSession, d: String): DataFrame =
-    stage("docs_spread", d) {
+    staged(s, "docs_spread", d) {
       Tables.documents(s, d)
         .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-    }(s.read.parquet(_))
+    }
+
+  /** [[docsSpread]] re-hashed by doc_id to cluster parallelism at read
+    * time — the per-doc tokenize/explode consumers' input. Small staged
+    * files pack into fewer scan splits, so the exchange pins the fan-out
+    * width; whether a consumer needs it is decided here, in one place. */
+  def docsWide(s: SparkSession, d: String): DataFrame =
+    docsSpread(s, d).repartition(s.sparkContext.defaultParallelism, col("doc_id"))
 
   /** Per-(doc, token) OCCURRENCE counts `(doc_id, tok, k)` over the raw
     * corpus — the tokenize-ONCE artifact of the whole bag-of-words
@@ -308,7 +389,7 @@ object StagedTables {
     * repartition pins the tokenizer fan-out at cluster parallelism
     * (single-file scan trap — the scoredDf guard). */
   def docTokCnt(s: SparkSession, d: String): DataFrame =
-    stage("doc_tok_cnt", d) {
+    staged(s, "doc_tok_cnt", d) {
       // No repartition (r16 ADVICE): docsSpread is already staged as
       // defaultParallelism hash-by-doc_id files, so the scan itself runs
       // wide — re-shuffling the text column here paid a second full-text
@@ -323,7 +404,7 @@ object StagedTables {
         .select(col("doc_id"), col("lang"),
           explode(graft.functions.TextFunctions.tokens(col("text"))).as("tok"))
         .groupBy("doc_id", "lang", "tok").agg(count(lit(1)).as("k"))
-    }(s.read.parquet(_))
+    }
 
   /** Distinct `(doc_id, tok)` incidence of the raw corpus — the
     * document-frequency grain t_inverted_index and t_cooccur_pmi both
@@ -342,23 +423,23 @@ object StagedTables {
     * dedup run materializes between phases (shingle once, pair once,
     * cluster once, then many reports read the cluster table). */
   def rawDocSets3(s: SparkSession, d: String): DataFrame =
-    stage("raw_docsets3", d) {
+    staged(s, "raw_docsets3", d) {
       graft.operators.Dedup.hashedDocSets(
         docsSpread(s, d), "doc_id", "text", 3, respread = false)
-    }(s.read.parquet(_))
+    }
 
   /** D3's verified near-dup pairs `(a, b, jaccard ≥ 0.5)` — MinHash(8)
     * + LSH(4×2) candidates verified by exact Jaccard over
     * [[rawDocSets3]]. */
   def ndPairs(s: SparkSession, d: String): DataFrame =
-    stage("nd_pairs", d) {
+    staged(s, "nd_pairs", d) {
       import graft.operators.Dedup
       val docSets = rawDocSets3(s, d)
       Dedup.verifiedJaccard(
           Dedup.lshCandidates(Dedup.lshBands(Dedup.minHashSignature(docSets, 8), 4, 2)),
           docSets)
         .filter(col("jaccard") >= 0.5)
-    }(s.read.parquet(_))
+    }
 
   /** Per-node degree `(node, dg)` of the co-purchase graph (w ≥ 1
     * undirected pairs) — the node-dim rollup g_degree_dist and
@@ -367,21 +448,21 @@ object StagedTables {
     * (sf10: 13.8 s wall, 840 MB of partial-agg shuffle per consumer —
     * high-group-count partial aggregation collapses little map-side). */
   def coDeg(s: SparkSession, d: String): DataFrame =
-    stage("codeg", d) {
+    staged(s, "codeg", d) {
       val pairs = coEdges(s, d).select("u", "v")
       pairs.select(col("u").as("node"))
         .unionAll(pairs.select(col("v").as("node")))
         .groupBy("node").agg(count(lit(1)).as("dg"))
-    }(s.read.parquet(_))
+    }
 
   /** D6's connected components `(doc, component)` over [[ndPairs]] —
     * the cluster assignment table d_components / d_dedup_report /
     * d_survivor_pick all read (pointer-jumping label propagation runs
     * ONCE; reports are joins/windows over the materialized labels). */
   def ndComponents(s: SparkSession, d: String): DataFrame =
-    stage("nd_comp", d) {
+    staged(s, "nd_comp", d) {
       graft.operators.Dedup.components(ndPairs(s, d), "a", "b")
-    }(s.read.parquet(_))
+    }
 
   /** The B51/B64/B71/B57 shared co-purchase edge table `(u, v, w)` —
     * distinct part pairs sharing an order, weighted by how many orders
@@ -391,7 +472,7 @@ object StagedTables {
     * B51/B71 read the unweighted projection (w ≥ 1), B64 its sparsified
     * w ≥ 2 subset, B57 the w ≥ min-support rules slice. */
   def coEdges(s: SparkSession, d: String): DataFrame =
-    stage("coedges", d) {
+    staged(s, "coedges", d) {
       // The numbered repartition pins the self-join (and the map-side
       // partial agg consuming its fan-out) at cluster parallelism — the
       // incidence projection is ~10 MB at sf0.1, so AQE would coalesce
@@ -406,5 +487,5 @@ object StagedTables {
         .agg(count(lit(1)).as("w"))
         .select(shiftright(col("uv"), 32).as("u"),
           col("uv").bitwiseAND(lit(0xffffffffL)).as("v"), col("w"))
-    }(s.read.parquet(_))
+    }
 }

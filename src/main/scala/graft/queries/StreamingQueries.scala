@@ -151,22 +151,6 @@ object StreamingQueries {
       sz / bytesPerPartition)).toInt
   }
 
-  /** Stage the events table as a µs-precision parquet dir for file-source
-    * streaming (parquet NANOS can't stream through a TimestampType
-    * schema). The staged copy of an immutable input dir is itself
-    * immutable — keyed by sfDir, staged once per JVM. `doubled = true`
-    * writes every event twice (two identical files) — the planted-
-    * duplicate input for the streaming dedup query. */
-  // JVM-wide staging lock (ADVICE r7): two threads racing a stager before
-  // its done-marker exists would both stage — harmless for an idempotent
-  // parquet write, but stagedLateEvents pins FILE MODIFICATION TIMES to
-  // order the replay, and a second staging pass re-pins them with a new t0
-  // while the first thread may already be streaming — scrambling the
-  // batch order the late-arrival semantics depend on. One lock serializes
-  // every check-then-stage; staging happens once per JVM, so contention
-  // is a non-issue.
-  private val stagingLock = new Object
-
   /** Writes each frame as ONE parquet file `dir/<name>`, modification
     * times pinned a minute apart in list order: the file source orders
     * the replay by modification time, one file per micro-batch. */
@@ -184,12 +168,14 @@ object StreamingQueries {
     }
   }
 
+  /** Stage the events table as a µs-precision parquet dir for file-source
+    * streaming (parquet NANOS can't stream through a TimestampType
+    * schema). `doubled = true` writes every event twice (two identical
+    * files) — the planted-duplicate input for the streaming dedup query. */
   private def stagedEvents(s: org.apache.spark.sql.SparkSession, d: String,
-                           doubled: Boolean = false, flush: Boolean = false): String = stagingLock.synchronized {
-    val key = Integer.toHexString(d.hashCode) +
-      (if (doubled) "x2" else "") + (if (flush) "fl" else "")
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_stream_events_$key"
-    if (!new java.io.File(s"$dir/events/_SUCCESS").isFile) {
+                           doubled: Boolean = false, flush: Boolean = false): String =
+    StagedTables.stageDir("stream_events" + (if (doubled) "_x2" else "") +
+        (if (flush) "_fl" else ""), d) { dir =>
       val ev = Tables.events(s, d)
       val base = if (doubled) ev.unionAll(ev) else ev
       // `flush` appends one sentinel event per user 2 h past end-of-stream
@@ -208,10 +194,8 @@ object StreamingQueries {
             lit(0.0).as("value"), lit(null).cast("string").as("props"))
         base.unionByName(sentinel)
       }
-      staged.write.mode("overwrite").parquet(s"$dir/events")
+      staged.write.mode("overwrite").parquet(dir)
     }
-    s"$dir/events"
-  }
 
   /** Stage the late-arrival replay: THREE parquet files with ordered
     * modification times, paced one file per micro-batch.
@@ -225,13 +209,9 @@ object StreamingQueries {
     *    month — weeks below the now-operative watermark, so the
     *    aggregation must DROP them — plus the closing 'flush' sentinel at
     *    max ts + 2 h whose event time pushes the final watermark over
-    *    every real window end (f_stream_session's heartbeat trick).
-    * Immutable per sfDir, staged once per JVM. */
-  private def stagedLateEvents(s: org.apache.spark.sql.SparkSession, d: String): String = stagingLock.synchronized {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_stream_events_" +
-      Integer.toHexString(d.hashCode) + "late3"
-    val done = new java.io.File(s"$dir/_STAGED")
-    if (!done.isFile) {
+    *    every real window end (f_stream_session's heartbeat trick). */
+  private def stagedLateEvents(s: org.apache.spark.sql.SparkSession, d: String): String =
+    StagedTables.stageDir("stream_events_late3", d) { dir =>
       val ev = Tables.events(s, d)
       val bounds = ev.agg(min(col("ts")).as("mn"), max(col("ts")).as("mx")).head()
       val (mn, mx) = (bounds.getTimestamp(0), bounds.getTimestamp(1))
@@ -250,9 +230,59 @@ object StreamingQueries {
         "00_real.parquet" -> ev,
         "01_heartbeat.parquet" -> flushRow(1),
         "02_late.parquet" -> planted))
-      done.createNewFile()
     }
-    dir
+
+  /** Stage events as THREE ts-range tercile files with pinned ascending
+    * modification times — a deterministic 3-batch CDC replay where every
+    * batch's event times follow the previous batch's (global ts sort ⇒
+    * per-user monotone trivially). */
+  private def stagedEventTerciles(s: org.apache.spark.sql.SparkSession, d: String): String =
+    StagedTables.stageDir("stream_events_ter3", d) { dir =>
+      // single-partition sort, THEN the id: on one partition
+      // monotonically_increasing_id is 0..n-1 in sort order (after a
+      // distributed orderBy the ids would be partition-offset encoded —
+      // monotone but not contiguous, breaking the n/3 cuts)
+      val one = Tables.events(s, d).coalesce(1)
+        .sortWithinPartitions("ts", "event_id")
+        .withColumn("__rn", monotonically_increasing_id())
+        .persist()
+      val n = one.count()
+      def slice(lo: Long, hi: Long) = one.filter(col("__rn") >= lo && col("__rn") < hi).drop("__rn")
+      val cut1 = n / 3
+      val cut2 = 2 * n / 3
+      stageReplay(dir, Seq(
+        "00_t0.parquet" -> slice(0, cut1),
+        "01_t1.parquet" -> slice(cut1, cut2),
+        "02_t2.parquet" -> slice(cut2, n)))
+      one.unpersist()
+    }
+
+  /** Stages every replay input (the bench's staging prebuild). */
+  private[queries] def stageReplays(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
+    stagedEvents(s, d)
+    stagedEvents(s, d, doubled = true)
+    stagedEvents(s, d, flush = true)
+    stagedLateEvents(s, d)
+    stagedEventTerciles(s, d)
+  }
+
+  /** Drains `df` into the memory sink `sink` — AvailableNow on a fresh
+    * checkpoint, `statePartitions` stateful partitions — and returns the
+    * sink table. */
+  private def drainToMemory(df: org.apache.spark.sql.DataFrame, sink: String,
+                            mode: OutputMode,
+                            statePartitions: Int = 8): org.apache.spark.sql.DataFrame = {
+    val s = df.sparkSession
+    withStatePartitions(s, statePartitions) {
+      withShmCheckpoint { ckpt =>
+        awaitBounded(df.writeStream.format("memory").queryName(sink)
+          .option("checkpointLocation", ckpt)
+          .outputMode(mode)
+          .trigger(Trigger.AvailableNow())
+          .start())
+      }
+    }
+    s.table(sink)
   }
 
   val all: Seq[QueryDef] = Seq(
@@ -268,21 +298,8 @@ object StreamingQueries {
         |  count(*) AS n_events,
         |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
         |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, d) =>
-      // the staged µs copy of an immutable input dir is itself immutable —
-      // key it by sfDir and stage once per JVM lifetime, not per run
       val counts = Events.tumblingCounts(Events.readEventStream(s, stagedEvents(s, d)))
-      val sink = "f_stream_tumbling_sink"
-      withStatePartitions(s, 8) {
-        withShmCheckpoint { ckpt =>
-          val q = counts.writeStream.format("memory").queryName(sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode(OutputMode.Complete())
-            .trigger(Trigger.AvailableNow())
-            .start()
-          awaitBounded(q)
-        }
-      }
-      s.table(sink)
+      drainToMemory(counts, "f_stream_tumbling_sink", OutputMode.Complete())
         .select(date_format(col("window.start"), "yyyy-MM-dd").as("day"),
           col("event_type"), col("n_events"), col("total_value"))
         .orderBy("day", "event_type")
@@ -342,20 +359,10 @@ object StreamingQueries {
         | AND p.ts >= c.ts - INTERVAL 1 HOUR AND p.ts <= c.ts
         |ORDER BY click_id, purchase_ts""".stripMargin) { (s, d) =>
       val ev = Events.readEventStream(s, stagedEvents(s, d))
-      val sink = "f_stream_join_sink"
-      withStatePartitions(s, 8) {
-        withShmCheckpoint { ckpt =>
-          val q = Events.clicksAfterPurchases(ev)
-            .select("click_id", "user_id", "click_ts", "purchase_ts", "purchase_value")
-            .writeStream.format("memory").queryName(sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode(OutputMode.Append())
-            .trigger(Trigger.AvailableNow())
-            .start()
-          awaitBounded(q)
-        }
-      }
-      s.table(sink).orderBy("click_id", "purchase_ts")
+      drainToMemory(Events.clicksAfterPurchases(ev)
+        .select("click_id", "user_id", "click_ts", "purchase_ts", "purchase_value"),
+        "f_stream_join_sink", OutputMode.Append())
+        .orderBy("click_id", "purchase_ts")
     },
 
     // F1f as a driver-visible query: Update output mode — the third of
@@ -369,19 +376,8 @@ object StreamingQueries {
       """SELECT event_type, count(*) AS n_events
         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
       val ev = Events.readEventStream(s, stagedEvents(s, d))
-      val sink = "f_stream_update_sink"
-      withStatePartitions(s, 8) {
-        withShmCheckpoint { ckpt =>
-          val q = ev.groupBy("event_type").agg(count(lit(1)).as("n_events"))
-            .writeStream.format("memory").queryName(sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode(OutputMode.Update())
-            .trigger(Trigger.AvailableNow())
-            .start()
-          awaitBounded(q)
-        }
-      }
-      s.table(sink)
+      drainToMemory(ev.groupBy("event_type").agg(count(lit(1)).as("n_events")),
+        "f_stream_update_sink", OutputMode.Update())
         .groupBy("event_type").agg(max("n_events").as("n_events"))
         .orderBy("event_type")
     },
@@ -405,19 +401,7 @@ object StreamingQueries {
         |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
         |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, d) =>
       val ev = Events.readEventStreamPaced(s, stagedLateEvents(s, d), 1)
-      val sink = "f_stream_late_sink"
-      withStatePartitions(s, 8) {
-        withShmCheckpoint { ckpt =>
-          val q = Events.tumblingCounts(ev)
-            .writeStream.format("memory").queryName(sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode(OutputMode.Append())
-            .trigger(Trigger.AvailableNow())
-            .start()
-          awaitBounded(q)
-        }
-      }
-      s.table(sink)
+      drainToMemory(Events.tumblingCounts(ev), "f_stream_late_sink", OutputMode.Append())
         .filter(col("event_type") =!= "flush")
         .select(date_format(col("window.start"), "yyyy-MM-dd").as("day"),
           col("event_type"), col("n_events"), col("total_value"))
@@ -454,20 +438,10 @@ object StreamingQueries {
         |ORDER BY user_id, session_start""".stripMargin) { (s, d) =>
       val evDir = stagedEvents(s, d, flush = true)
       val ev = Events.readEventStream(s, evDir)
-      val sink = "f_stream_session_sink"
-      withStatePartitions(s, statePartitionsFor(s, evDir)) {
-        withShmCheckpoint { ckpt =>
-          val q = Events.sessionCounts(ev, "30 minutes")
-            .writeStream.format("memory").queryName(sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode(OutputMode.Append())
-            .trigger(Trigger.AvailableNow())
-            .start()
-          awaitBounded(q)
-        }
-      }
+      val out = drainToMemory(Events.sessionCounts(ev, "30 minutes"),
+        "f_stream_session_sink", OutputMode.Append(), statePartitionsFor(s, evDir))
       val maxReal = Tables.events(s, d).agg(max(col("ts"))).head().getTimestamp(0)
-      s.table(sink)
+      out
         .filter(col("session_window.start") <= lit(maxReal))
         .select(col("user_id"),
           date_format(col("session_window.start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
@@ -546,18 +520,7 @@ object StreamingQueries {
     // run must land on the identical window assignment.
     QueryDef.sql("f_stream_sliding", AnalyticsQueries.slidingOracleSql) { (s, d) =>
       val counts = Events.slidingCounts(Events.readEventStream(s, stagedEvents(s, d)))
-      val sink = "f_stream_sliding_sink"
-      withStatePartitions(s, 8) {
-        withShmCheckpoint { ckpt =>
-          val q = counts.writeStream.format("memory").queryName(sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode(OutputMode.Complete())
-            .trigger(Trigger.AvailableNow())
-            .start()
-          awaitBounded(q)
-        }
-      }
-      s.table(sink)
+      drainToMemory(counts, "f_stream_sliding_sink", OutputMode.Complete())
         .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
           col("event_type"), col("n_events"), col("total_value"))
         .orderBy("window_start", "event_type")
@@ -586,53 +549,10 @@ object StreamingQueries {
         .groupBy(col("c_mktsegment").as("segment"), col("event_type"))
         .agg(count(lit(1)).as("n_events"),
           expr("CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE)").as("total_value"))
-      val sink = "f_stream_enrich_sink"
-      withStatePartitions(s, 8) {
-        withShmCheckpoint { ckpt =>
-          val q = agg.writeStream.format("memory").queryName(sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode(OutputMode.Complete())
-            .trigger(Trigger.AvailableNow())
-            .start()
-          awaitBounded(q)
-        }
-      }
-      s.table(sink).orderBy("segment", "event_type")
+      drainToMemory(agg, "f_stream_enrich_sink", OutputMode.Complete())
+        .orderBy("segment", "event_type")
     }
   )
 
   private val upsertRun = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Stage events as THREE ts-range tercile files with pinned ascending
-    * modification times — a deterministic 3-batch CDC replay where every
-    * batch's event times follow the previous batch's (global ts sort ⇒
-    * per-user monotone trivially). Immutable per sfDir, staged once per
-    * JVM (same lock discipline as the other stagers). */
-  private def stagedEventTerciles(s: org.apache.spark.sql.SparkSession, d: String): String =
-    stagingLock.synchronized {
-      val dir = s"${System.getProperty("java.io.tmpdir")}/graft_stream_events_" +
-        Integer.toHexString(d.hashCode) + "ter3"
-      val done = new java.io.File(s"$dir/_STAGED")
-      if (!done.isFile) {
-        // single-partition sort, THEN the id: on one partition
-        // monotonically_increasing_id is 0..n-1 in sort order (after a
-        // distributed orderBy the ids would be partition-offset encoded —
-        // monotone but not contiguous, breaking the n/3 cuts)
-        val one = Tables.events(s, d).coalesce(1)
-          .sortWithinPartitions("ts", "event_id")
-          .withColumn("__rn", monotonically_increasing_id())
-          .persist()
-        val n = one.count()
-        def slice(lo: Long, hi: Long) = one.filter(col("__rn") >= lo && col("__rn") < hi).drop("__rn")
-        val cut1 = n / 3
-        val cut2 = 2 * n / 3
-        stageReplay(dir, Seq(
-          "00_t0.parquet" -> slice(0, cut1),
-          "01_t1.parquet" -> slice(cut1, cut2),
-          "02_t2.parquet" -> slice(cut2, n)))
-        one.unpersist()
-        done.createNewFile()
-      }
-      dir
-    }
 }

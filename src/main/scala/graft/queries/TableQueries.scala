@@ -5,7 +5,7 @@ import graft.sources.{SnapshotTable, Tables}
 
 /** SURVEY §2 group G16 — the snapshot-table (table-format) surface as
   * driver-gated queries: a fixed three-commit scenario over `orders`
-  * (create → merge → delete) staged once per JVM, then read back at
+  * (create → merge → delete) staged once (StagedTables), then read back at
   * different versions. The mutations are deterministic functions of the
   * base table, so every post-mutation state is reproducible as plain SQL
   * over `orders` — which is exactly what the oracles do. Aggregated
@@ -22,32 +22,29 @@ import graft.sources.{SnapshotTable, Tables}
   */
 object TableQueries {
 
-  /** Guards the check-then-build of every scenario dir: two concurrent
-    * callers racing latestVersion/delete/create would corrupt the staged
-    * table (the StreamingQueries staging-lock discipline). */
-  private val scenarioLock = new Object
+  /** v0: orders projected to (o_orderkey, o_orderstatus, price). */
+  private def base(s: org.apache.spark.sql.SparkSession, d: String) =
+    Tables.orders(s, d).select(col("o_orderkey"),
+      col("o_orderstatus"), col("o_totalprice").as("price"))
 
-  /** Build the scenario table once per (input dir) per JVM — the staged
-    * idiom; SnapshotTable's own commit markers make the check cheap. */
-  private def scenario(s: org.apache.spark.sql.SparkSession, d: String): String = scenarioLock.synchronized {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_snaptable_" +
-      Integer.toHexString(d.hashCode)
-    if (SnapshotTable.latestVersion(dir) < 2) {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      val base = Tables.orders(s, d).select(col("o_orderkey"),
-        col("o_orderstatus"), col("o_totalprice").as("price"))
-      SnapshotTable.create(s, dir, base, "o_orderkey")
-      val updates = base.filter(col("o_orderkey") % 7 === 3)
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          (col("price") + 100.0).as("price"))
-      val inserts = base.filter(col("o_orderkey") % 101 === 5)
-        .select((col("o_orderkey") + 100000000L).as("o_orderkey"),
-          lit("N").as("o_orderstatus"), lit(50.0).as("price"))
-      SnapshotTable.merge(s, dir, updates.unionByName(inserts), "o_orderkey")
-      SnapshotTable.delete(s, dir, col("o_orderstatus") === "P", "o_orderkey")
-    }
-    dir
+  /** The G16 commits into `dir`: create → merge (`% 7` updates, `% 101`
+    * inserts) → delete status 'P'. */
+  private def g16Commits(s: org.apache.spark.sql.SparkSession, d: String, dir: String): Unit = {
+    val b = base(s, d)
+    SnapshotTable.create(s, dir, b, "o_orderkey")
+    val updates = b.filter(col("o_orderkey") % 7 === 3)
+      .select(col("o_orderkey"), col("o_orderstatus"),
+        (col("price") + 100.0).as("price"))
+    val inserts = b.filter(col("o_orderkey") % 101 === 5)
+      .select((col("o_orderkey") + 100000000L).as("o_orderkey"),
+        lit("N").as("o_orderstatus"), lit(50.0).as("price"))
+    SnapshotTable.merge(s, dir, updates.unionByName(inserts), "o_orderkey")
+    SnapshotTable.delete(s, dir, col("o_orderstatus") === "P", "o_orderkey")
   }
+
+  /** The shared G16 scenario table (three versions). */
+  private def scenario(s: org.apache.spark.sql.SparkSession, d: String): String =
+    StagedTables.stageDir("snaptable", d)(g16Commits(s, d, _))
 
   /** The per-status state fingerprint both engines aggregate to. */
   private def stateAgg(df: org.apache.spark.sql.DataFrame) =
@@ -230,89 +227,52 @@ object TableQueries {
     * while the other ~14 carry over by reference and are provably
     * feed-silent. The cut is `max(key) div 16`: exact integer division
     * in both engines, deterministic at every sf. */
-  private def cdfScenario(s: org.apache.spark.sql.SparkSession, d: String): String = scenarioLock.synchronized {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_snaptable_f_" +
-      Integer.toHexString(d.hashCode)
-    if (SnapshotTable.latestVersion(dir) < 2) {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      val base = Tables.orders(s, d).select(col("o_orderkey"),
-        col("o_orderstatus"), col("o_totalprice").as("price"))
-      SnapshotTable.create(s, dir, base, "o_orderkey", filesPerCommit = 16)
-      val cut = base.agg(max(col("o_orderkey")).cast("long")).head().getLong(0) / 16
-      val updates = base
+  private def cdfScenario(s: org.apache.spark.sql.SparkSession, d: String): String =
+    StagedTables.stageDir("snaptable_f", d) { dir =>
+      val b = base(s, d)
+      SnapshotTable.create(s, dir, b, "o_orderkey", filesPerCommit = 16)
+      val cut = b.agg(max(col("o_orderkey")).cast("long")).head().getLong(0) / 16
+      val updates = b
         .filter(col("o_orderkey") % 7 === 3 && col("o_orderkey") <= cut)
         .select(col("o_orderkey"), col("o_orderstatus"),
           (col("price") + 100.0).as("price"))
-      val inserts = base.filter(col("o_orderkey") % 101 === 5)
+      val inserts = b.filter(col("o_orderkey") % 101 === 5)
         .select((col("o_orderkey") + 100000000L).as("o_orderkey"),
           lit("N").as("o_orderstatus"), lit(50.0).as("price"))
       SnapshotTable.merge(s, dir, updates.unionByName(inserts), "o_orderkey")
       SnapshotTable.delete(s, dir,
         col("o_orderstatus") === "P" && col("o_orderkey") <= cut, "o_orderkey")
     }
-    dir
-  }
 
   /** The G18 scenario: create, then a schema-EVOLVING merge that adds a
     * discount column on the matched keys only. Own dir (two versions). */
-  private def evolveScenario(s: org.apache.spark.sql.SparkSession, d: String): String = scenarioLock.synchronized {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_snaptable_e_" +
-      Integer.toHexString(d.hashCode)
-    if (SnapshotTable.latestVersion(dir) < 1) {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      val base = Tables.orders(s, d).select(col("o_orderkey"),
-        col("o_orderstatus"), col("o_totalprice").as("price"))
-      SnapshotTable.create(s, dir, base, "o_orderkey")
-      val updates = base.filter(col("o_orderkey") % 7 === 3)
-        .withColumn("discount", lit(0.05))
-      SnapshotTable.merge(s, dir, updates, "o_orderkey", evolve = true)
+  private def evolveScenario(s: org.apache.spark.sql.SparkSession, d: String): String =
+    StagedTables.stageDir("snaptable_e", d) { dir =>
+      val b = base(s, d)
+      SnapshotTable.create(s, dir, b, "o_orderkey")
+      SnapshotTable.merge(s, dir,
+        b.filter(col("o_orderkey") % 7 === 3).withColumn("discount", lit(0.05)),
+        "o_orderkey", evolve = true)
     }
-    dir
-  }
 
   /** The G17 scenario: the G16 three commits plus a compaction. Staged in
     * its OWN dir so the shared G16 history stays three versions. */
-  private def compactScenario(s: org.apache.spark.sql.SparkSession, d: String): String = scenarioLock.synchronized {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_snaptable_c_" +
-      Integer.toHexString(d.hashCode)
-    if (SnapshotTable.latestVersion(dir) < 3) {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      val base = Tables.orders(s, d).select(col("o_orderkey"),
-        col("o_orderstatus"), col("o_totalprice").as("price"))
-      SnapshotTable.create(s, dir, base, "o_orderkey")
-      val updates = base.filter(col("o_orderkey") % 7 === 3)
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          (col("price") + 100.0).as("price"))
-      val inserts = base.filter(col("o_orderkey") % 101 === 5)
-        .select((col("o_orderkey") + 100000000L).as("o_orderkey"),
-          lit("N").as("o_orderstatus"), lit(50.0).as("price"))
-      SnapshotTable.merge(s, dir, updates.unionByName(inserts), "o_orderkey")
-      SnapshotTable.delete(s, dir, col("o_orderstatus") === "P", "o_orderkey")
+  private def compactScenario(s: org.apache.spark.sql.SparkSession, d: String): String =
+    StagedTables.stageDir("snaptable_c", d) { dir =>
+      g16Commits(s, d, dir)
       SnapshotTable.compact(s, dir, "o_orderkey", targetFiles = 2)
     }
-    dir
-  }
 
   /** G21 scenario: create → merge → delete (the "bad write") → RESTORE
     * back to the post-merge version. */
-  private def restoreScenario(s: org.apache.spark.sql.SparkSession, d: String): String = scenarioLock.synchronized {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_snaptable_r_" +
-      Integer.toHexString(d.hashCode)
-    if (SnapshotTable.latestVersion(dir) < 3) {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      val base = Tables.orders(s, d).select(col("o_orderkey"),
-        col("o_orderstatus"), col("o_totalprice").as("price"))
-      SnapshotTable.create(s, dir, base, "o_orderkey")
-      val updates = base.filter(col("o_orderkey") % 7 === 3)
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          (col("price") + 100.0).as("price"))
-      val inserts = base.filter(col("o_orderkey") % 101 === 5)
-        .select((col("o_orderkey") + 100000000L).as("o_orderkey"),
-          lit("N").as("o_orderstatus"), lit(50.0).as("price"))
-      SnapshotTable.merge(s, dir, updates.unionByName(inserts), "o_orderkey")
-      SnapshotTable.delete(s, dir, col("o_orderstatus") === "P", "o_orderkey")
+  private def restoreScenario(s: org.apache.spark.sql.SparkSession, d: String): String =
+    StagedTables.stageDir("snaptable_r", d) { dir =>
+      g16Commits(s, d, dir)
       SnapshotTable.restore(s, dir, 1)
     }
-    dir
-  }
+
+  /** Stages all five scenario tables (the bench's staging prebuild). */
+  private[queries] def stageScenarios(s: org.apache.spark.sql.SparkSession, d: String): Unit =
+    Seq(scenario _, cdfScenario _, evolveScenario _, compactScenario _, restoreScenario _)
+      .foreach(_(s, d))
 }

@@ -329,8 +329,7 @@ object TextQueries {
         |  -list_reduce(list(p * lg ORDER BY c), (a, b) -> a + b) AS entropy
         |FROM e2 GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
-      val cnt = StagedTables.docsSpread(s, d) // spread corpus copy: 32-way map side (r17)
-        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+      val cnt = StagedTables.docsWide(s, d)
         .select(col("doc_id"), explode(split(col("text"), "")).as("c"))
         .groupBy("doc_id", "c").agg(count(lit(1)).as("k"))
       cnt.withColumn("n", sum("k").over(Window.partitionBy("doc_id")))
@@ -374,8 +373,7 @@ object TextQueries {
          |    THEN CAST(top_n AS DOUBLE) / nb ELSE 0.0 END AS top_bigram_frac
          |FROM b0 LEFT JOIN ba USING (doc_id) ORDER BY doc_id""".stripMargin) { (s, d) =>
       import graft.operators.Dedup
-      val base = graft.queries.StagedTables.docsSpread(s, d)
-        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+      val base = graft.queries.StagedTables.docsWide(s, d)
         .select(col("doc_id"), tokens(col("text")).as("__toks"))
         .select(col("doc_id"),
           size(col("__toks")).as("n_tokens"),
@@ -468,8 +466,7 @@ object TextQueries {
          |SELECT doc_id, CAST(rnk AS BIGINT) AS rnk, tok, tf, df, score
          |FROM r WHERE rnk <= 3 ORDER BY doc_id, rnk""".stripMargin) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
-      val docs = StagedTables.docsSpread(s, d) // spread corpus copy: 32-way map side (r17)
-        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+      val docs = StagedTables.docsWide(s, d)
       // `tf` is read by BOTH the scoring branch and the df aggregation.
       // Left lazy, Catalyst plans the tokenize→explode→aggregate subtree
       // TWICE (exchange reuse doesn't apply — the consumers sit in
@@ -536,8 +533,7 @@ object TextQueries {
       val clean = regexp_replace(regexp_replace(regexp_replace(col("t"),
         lit(piiEmail), lit("<EMAIL>")), lit(piiUrl), lit("<URL>")),
         lit(piiPhone), lit("<PHONE>"))
-      StagedTables.docsSpread(s, d) // spread corpus copy: 32-way map side (r17)
-        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+      StagedTables.docsWide(s, d)
         .select(col("doc_id"), t.as("t"))
         .select(col("doc_id"),
           size(regexp_extract_all(col("t"), lit(piiEmail), lit(0))).cast("long").as("n_email"),
@@ -665,7 +661,7 @@ object TextQueries {
       // (graft_shingles: one compiled byte-scan per doc vs ~20 CPU-s of
       // interpreted HOF evaluation — ShingleExpr, spec'd bit-identical)
       // and pinned at cluster parallelism:
-      //  (1) docs repartition by doc_id — parallelizes shingling (the
+      //  (1) docsWide spreads docs by doc_id — parallelizes shingling (the
       //      scan is one input split; un-repartitioned, the whole explode
       //      runs on a single task — measured 9 s of the query);
       //  (2) the (doc_id,bg) count then needs NO exchange (doc_id ⊆ keys),
@@ -674,8 +670,7 @@ object TextQueries {
       //      bfd⋈freq equi-join, so neither shuffles;
       //  (3) only the final per-doc reduce exchanges again.
       val fan = s.sparkContext.defaultParallelism
-      val bfd = StagedTables.docsSpread(s, d) // spread corpus copy: 32-way map side (r17)
-        .repartition(fan, col("doc_id"))
+      val bfd = StagedTables.docsWide(s, d)
         .select(col("doc_id"),
           explode(call_function("graft_shingles", col("text"), lit(2))).as("bg"))
         .groupBy("doc_id", "bg").agg(count(lit(1)).as("k"))
@@ -956,8 +951,7 @@ object TextQueries {
          |WHERE rank <= 10 ORDER BY lang, rank""".stripMargin
     }) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
-      val docs = StagedTables.docsSpread(s, d) // spread corpus copy: 32-way map side (r17)
-        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+      val docs = StagedTables.docsWide(s, d)
       // Doc-frequency via per-row array_distinct, not a global (doc, tok)
       // DISTINCT: doc_id is unique per row, so deduping a token WITHIN its
       // document is a narrow per-row operation — the corpus-wide exchange
@@ -1022,8 +1016,7 @@ object TextQueries {
          |ORDER BY source""".stripMargin
     }) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
-      val docs = StagedTables.docsSpread(s, d) // spread corpus copy: 32-way map side (r17)
-        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+      val docs = StagedTables.docsWide(s, d)
       // ONE corpus pass: doc counts AND token totals in the same
       // (source, lang) partial agg — a separate token aggregate would
       // tokenize the whole corpus a second time. Everything below runs
